@@ -2,6 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.connector.shardedlog.{ShardedLog, ShardedLogSource, ShardedLogWriter}
 import graft.etl.SessionEtl
@@ -26,10 +27,25 @@ object Topology {
       .load()
 
   /** ETL consumer (≙ consumer.py): source stream → decode/validate/enrich/
-    * route → keyed PutRecords into the destination stream per route +
-    * dead-letter JSON under `errors/`. One foreachBatch pass per
-    * micro-batch; per-session_id order is preserved via (shard,
-    * sequence_number) ordering into the destination shards.
+    * route → keyed PutRecords into the destination stream per route, and
+    * dead-letter JSON under `errorsDir`.
+    *
+    * Each non-empty micro-batch is one scan, one decode and one shuffle:
+    * [[SessionEtl.fanOut]] gives every record its destination and output
+    * line, and one multi-destination [[ShardedLogWriter.write]] appends the
+    * routed records and writes the dead letters — two Spark jobs (the
+    * shuffle's map stage, then the writing stage). Per-session_id order is
+    * preserved via (shard, sequence_number) ordering into the destination
+    * shards.
+    *
+    * Dead letters go to one file per (micro-batch, source shard), named
+    * `part-<query id>-<batch id>-<source shard>.json` by the streaming
+    * query's id (kept in the checkpoint, so a restart keeps it) and the
+    * batch id. Replay contract: a batch that runs again after a crash
+    * before its commit appends its routed records to the destination
+    * streams again (at-least-once; the copies differ only in
+    * `processing_timestamp`), but replaces its dead-letter files, so dead
+    * letters are exactly-once.
     */
   def startEtlConsumer(spark: SparkSession, sourceStream: String,
       destStreams: Map[String, String], errorsDir: String,
@@ -41,19 +57,14 @@ object Topology {
       .queryName("graft-etl-consumer")
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val outs = SessionEtl.transform(batch, dataCol = "data")
-        val order = Seq(col("shard"), col("sequence_number"))
-        destStreams.foreach { case (route, streamDir) =>
-          ShardedLogWriter.write(
-            outs.enriched.filter(col("route") === route),
-            streamDir, col("session_id"), col("data"), order)
-        }
-        val dead = outs.deadLetter
-        if (!dead.isEmpty)
-          dead.withColumn("payload", col("payload").cast("string"))
-            .write.mode(SaveMode.Append).json(errorsDir)
-        ()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val queryId = batch.sparkSession.sparkContext
+          .getLocalProperty(StreamExecution.QUERY_ID_KEY)
+        val deadLetters = ShardedLogWriter.FileChannel(SessionEtl.ErrorChannel,
+          errorsDir, col("shard"), shard => s"part-$queryId-$batchId-$shard.json")
+        ShardedLogWriter.write(SessionEtl.fanOut(batch), col("destination"),
+          destStreams, Seq(deadLetters), col("session_id"), col("line"),
+          Seq(col("shard"), col("sequence_number")))
       }
       .start()
   }

@@ -72,6 +72,29 @@ object SessionEtl {
       forall(bh, x => Enrich.qty(x).isNotNull)
   }
 
+  /** Why an invalid record is dead-lettered: the first check of [[isValid]]
+    * it fails, in the order the reference consumer would raise. Only
+    * meaningful where `isValid` is false.
+    */
+  private def errorClass(parsed: Column): Column =
+    when(parsed.isNull ||
+         (parsed.getField(SessionSchemas.corruptColumn).isNotNull &&
+          parsed.getField("session_id").isNull &&
+          parsed.getField("country").isNull &&
+          parsed.getField("browse_history").isNull),
+         lit("corrupt_json"))
+      .when(parsed.getField("session_id").isNull, lit("missing_session_id"))
+      .when(parsed.getField("country").isNull, lit("missing_country"))
+      .when(parsed.getField("browse_history").isNull, lit("missing_browse_history"))
+      .otherwise(lit("bad_quantity"))
+
+  /** Dead-letter record over [[decode]]'s output: the pass-through input
+    * columns, the raw `payload` and its `error` class.
+    */
+  private def deadLetterFields(passThrough: Seq[Column]): Seq[Column] =
+    passThrough ++ Seq(col("raw_json").as("payload"),
+      errorClass(col("parsed")).as("error"))
+
   /** S5: output wire format. The reference mutates the decoded dict in place
     * and re-serializes the WHOLE record (consumer.py:167-169), so unknown
     * input fields must pass through. We reproduce that with JSON-string
@@ -104,18 +127,7 @@ object SessionEtl {
 
     val deadLetter = decoded
       .filter(!isValid(col("parsed")))
-      .select(passThrough ++ Seq(
-        col("raw_json").as("payload"),
-        when(col("parsed").isNull ||
-             (col("parsed").getField(SessionSchemas.corruptColumn).isNotNull &&
-              col("parsed").getField("session_id").isNull &&
-              col("parsed").getField("country").isNull &&
-              col("parsed").getField("browse_history").isNull),
-             lit("corrupt_json"))
-          .when(col("parsed").getField("session_id").isNull, lit("missing_session_id"))
-          .when(col("parsed").getField("country").isNull, lit("missing_country"))
-          .when(col("parsed").getField("browse_history").isNull, lit("missing_browse_history"))
-          .otherwise(lit("bad_quantity")).as("error")): _*)
+      .select(deadLetterFields(passThrough): _*)
 
     val bh = col("parsed").getField("browse_history")
     val enriched0 = decoded
@@ -137,5 +149,36 @@ object SessionEtl {
       col("route"), col("data")): _*)
 
     EtlOutputs(enriched, deadLetter)
+  }
+
+  /** Destination of dead letters in [[fanOut]], beside the [[Route]]
+    * destinations (≙ the reference's Firehose `errors/` prefix).
+    */
+  val ErrorChannel = "errors"
+
+  /** [[transform]] as one projection over one [[decode]], for sinks that
+    * fan every record out of a single pass (the topology's ETL consumer).
+    * One output row per input row: the pass-through input columns,
+    * `session_id`, `destination` (the [[Route]] of a valid record,
+    * [[ErrorChannel]] for a dead letter) and `line`, the record's output
+    * wire format — the enriched JSON of [[transform]]'s `data`, or the
+    * dead letter as the JSON object `DataFrameWriter.json` writes for a
+    * `deadLetter` row (same fields, formats and omitted nulls).
+    */
+  def fanOut(raw: DataFrame, dataCol: String = "data",
+      clock: Column = current_timestamp()): DataFrame = {
+    val parsed = col("parsed")
+    val decoded = decode(raw, dataCol).withColumn("valid", isValid(parsed))
+    val passThrough = raw.columns.filterNot(_ == dataCol).map(col).toSeq
+    val bh = parsed.getField("browse_history")
+    val enrichedLine = outputJson(col("raw_json"),
+      Enrich.processingTimestamp(clock), Enrich.overallProductQuantity(bh),
+      Enrich.overallInShoppingCart(bh), Enrich.totalDifferentProducts(bh))
+    val deadLetterLine = to_json(struct(deadLetterFields(passThrough): _*))
+    decoded.select(passThrough ++ Seq(
+      parsed.getField("session_id").as("session_id"),
+      when(col("valid"), Route.route(parsed.getField("country")))
+        .otherwise(lit(ErrorChannel)).as("destination"),
+      when(col("valid"), enrichedLine).otherwise(deadLetterLine).as("line")): _*)
   }
 }

@@ -11,7 +11,8 @@ import graft.connector.shardedlog.ShardedLog
   * checkpoint with exactly-once content in the destination streams, no
   * dead-letter loss, and — for the harshest window, a crash AFTER the
   * sink write but BEFORE the offset commit — the documented at-least-once
-  * replay that an idempotent reader collapses back to exactly-once.
+  * replay that an idempotent reader collapses back to exactly-once, while
+  * dead letters stay exactly-once through the replay.
   */
 class TopologyChaosSpec extends SparkTestBase {
   import spark.implicits._
@@ -85,9 +86,17 @@ class TopologyChaosSpec extends SparkTestBase {
     val src = s"$base/source"; val usa = s"$base/usa"; val intl = s"$base/intl"
     Seq(src, usa, intl).foreach(ShardedLog.createStream(_, 2))
     val sids = (1 to 6).map(i => s"s$i")
-    sids.foreach(sid =>
-      ShardedLog.putRecord(src, sid, record(sid, "USA", 1, 1).getBytes("UTF-8")))
-    ShardedLog.putRecord(src, "x1", "corrupt{{{".getBytes("UTF-8"))
+    val shards = ShardedLog.listShards(src)
+    val malformed = shards.map(shard => s"truncated-$shard{")
+    // per shard: three sessions, then a malformed record — with the poll
+    // cap of 2 per shard, the last micro-batch (the one the crash below
+    // replays) holds sessions AND dead letters
+    shards.zip(sids.grouped(3).toSeq).zip(malformed).foreach { case ((shard, group), bad) =>
+      val now = System.currentTimeMillis()
+      ShardedLog.appendLines(src, shard,
+        group.map(sid => (sid, record(sid, "USA", 1, 1).getBytes("UTF-8"), now)) :+
+          ((s"x-$shard", bad.getBytes("UTF-8"), now)))
+    }
 
     def run(ckpt: String): Unit = {
       val q = Topology.startEtlConsumer(spark, src,
@@ -147,9 +156,11 @@ class TopologyChaosSpec extends SparkTestBase {
     // exactly-once — the documented contract for PutRecords retries on
     // the reference side as well
     assert(usaRows.map(r => (r._1, norm(r._2))).distinct.size == sids.size)
-    // dead letter: the corrupt payload never gets lost
+    // dead letters are exactly-once even across the replay: the replayed
+    // batch replaces its dead-letter files instead of adding copies
     val errs = spark.read.json(s"$base/errors")
       .select($"payload").as[String].collect().toSeq
-    assert(errs.contains("corrupt{{{"))
+    assert(errs.sorted == malformed.sorted,
+      s"each malformed record must be in errors/ exactly once: $errs")
   }
 }

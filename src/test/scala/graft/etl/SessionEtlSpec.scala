@@ -130,6 +130,41 @@ class SessionEtlSpec extends SparkTestBase {
     assert(r.getAs[Long]("overall_in_shopping_cart") == 0L)
   }
 
+  test("fanOut: dead-letter lines are DataFrameWriter.json's lines for all five error classes") {
+    val bad = Seq(
+      "not json" -> "corrupt_json",
+      """{"country":"USA","browse_history":[]}""" -> "missing_session_id",
+      """{"session_id":"x2","browse_history":[]}""" -> "missing_country",
+      """{"session_id":"x1","country":"USA"}""" -> "missing_browse_history",
+      canonical.replace("\"quantity\": 2,", "\"quantity\": \"two\",") -> "bad_quantity")
+    // the source's pass-through columns, with one null key to show null
+    // fields are left out the same way
+    val raw = (bad.map(_._1) :+ canonical).zipWithIndex.map { case (j, i) =>
+      ("shard-00001", i.toLong, java.sql.Timestamp.valueOf(s"2025-07-16 14:26:1$i.25"),
+        if (i == 0) null else s"k$i", j)
+    }.toDF("shard", "sequence_number", "arrival_timestamp", "partition_key", "data")
+      .withColumn("data", col("data").cast("binary"))
+    val clock = lit("2025-07-16 14:26:10.123456").cast("timestamp")
+    val outs = SessionEtl.transform(raw, clock = clock)
+    val dir = java.nio.file.Files.createTempDirectory("graft-dead-letter").resolve("errors").toString
+    outs.deadLetter.withColumn("payload", col("payload").cast("string")).write.json(dir)
+    val written = spark.read.text(dir).as[String].collect().sorted.toSeq
+    assert(spark.read.json(dir).select("error").as[String].collect().sorted.toSeq ==
+      bad.map(_._2).sorted)
+    val isoMillis = "\"arrival_timestamp\":\"\\d{4}-\\d\\d-\\d\\dT\\d\\d:\\d\\d:\\d\\d\\.250(Z|[+-]\\d\\d:\\d\\d)\"".r
+    assert(written.size == bad.size && written.forall(isoMillis.findFirstIn(_).isDefined), written)
+    assert(written.count(_.contains("\"partition_key\"")) == bad.size - 1, written)
+
+    val fanned = SessionEtl.fanOut(raw, clock = clock)
+    val lines = fanned.filter(col("destination") === SessionEtl.ErrorChannel)
+      .select("line").as[String].collect().sorted.toSeq
+    assert(lines == written)
+    // the valid record's line is transform's enriched `data`, on its route
+    val valid = fanned.filter(col("destination") =!= SessionEtl.ErrorChannel)
+      .select("destination", "line").as[(String, String)].collect().toSeq
+    assert(valid == outs.enriched.select("route", "data").as[(String, String)].collect().toSeq)
+  }
+
   test("pass-through source columns survive (shard/sequence metadata)") {
     val df = Seq(("s-0", 7L, canonical)).toDF("shard", "seq", "data")
     val out = SessionEtl.transform(df)
